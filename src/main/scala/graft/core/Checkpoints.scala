@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Row}
 
 /**
  * Lineage cuts with a cluster-survivable option.
@@ -37,6 +37,14 @@ import org.apache.spark.sql.Dataset
  * Row-identity across both modes is pinned by ExtSpec ("reliable
  * checkpoint mode: identical results"): the cut is a pure
  * materialization boundary, never a semantic choice.
+ *
+ * Fixed-point loops read their convergence and sizing counts through
+ * [[cutObserved]], the one place that touches
+ * `queryExecution.observedMetrics`: the loop attaches `observe()`
+ * metrics to the frame it is about to cut, and the cut's own
+ * materialization evaluates them (exactly once per successful
+ * execution; task retries do not double-count), so a count costs no
+ * job of its own.
  */
 object Checkpoints {
 
@@ -65,6 +73,24 @@ object Checkpoints {
         ds.checkpoint(eager)
       case None => ds.localCheckpoint(eager)
     }
+  }
+
+  /**
+   * Eagerly [[cut]] `ds`, which carries `observe()` metrics, and return
+   * the cut frame plus the metric rows named `names`, in `names` order.
+   * The rows are identical to what [[cut]] returns; only the metrics are
+   * added. A named metric missing after the cut (the name was never
+   * observed in `ds`'s plan, or the cut did not execute it) throws an
+   * `IllegalStateException` naming the metric and `caller` — a loop
+   * must never guess a convergence or size count.
+   */
+  def cutObserved[T](ds: Dataset[T], caller: String,
+                     names: String*): (Dataset[T], Seq[Row]) = {
+    val out = cut(ds)
+    val metrics = ds.queryExecution.observedMetrics
+    (out, names.map(n => metrics.getOrElse(n, throw new IllegalStateException(
+      s"$caller: observed metric '$n' missing after the lineage cut — " +
+        "the cut did not execute a plan observing it"))))
   }
 
   /** `.lineageCut(...)` chain syntax for [[cut]]. */

@@ -1,7 +1,6 @@
 package graft.core
 
-import graft.core.Checkpoints.CutOps
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 
 /**
@@ -97,30 +96,6 @@ object DistanceJoin {
   }
 
   /**
-   * NEAREST-neighbor join: for every left point, its single closest
-   * right point (ties to the smallest `rIdCol`). Exact, via ITERATIVE
-   * RADIUS DOUBLING over [[radiusJoin]]: probe at `startRadius`,
-   * resolve the lefts that found any candidate (all pairs within r are
-   * present, so the per-left minimum at radius r IS the true nearest),
-   * re-probe only the unresolved lefts at 2r, up to `maxRadius` —
-   * log2(maxRadius/startRadius) rounds, each a hash join that carries
-   * only the still-unmatched lefts. Lefts with no right point within
-   * `maxRadius` are OMITTED (the bound is the caller's contract; an
-   * unbounded search against an empty right side would never
-   * terminate). VALUE-duplicate left rows collapse to one output row —
-   * the group key is the whole left row; pass `lIdCol` (a unique id)
-   * to group on a slim key instead, which both preserves duplicates-
-   * by-payload and keeps wide left payloads out of the per-round
-   * shuffles (the payload joins back once at the end).
-   *
-   * Scale: round i costs |unmatched_i| × (right density within 3×3
-   * cells at radius 2^i) — geometrically fewer lefts against
-   * geometrically larger cells; for realistic densities almost
-   * everything resolves in round 1 and the tail pays the doubling.
-   * Each round lineage-cuts the shrinking unmatched set ([[Checkpoints.cut]]) to stop
-   * plan growth.
-   */
-  /**
    * k-NEAREST-neighbors join: for every left point, its k closest
    * right points with ranks (ties (dist2, right id) — the repo's
    * bounded-heap convention). Same iterative radius doubling as
@@ -131,9 +106,10 @@ object DistanceJoin {
    * within `maxRadius` are resolved AT maxRadius with however many
    * they have (never silently padded). Per-left top-k rides the
    * bounded-heap aggregate — no window, no sort. Right ids must be
-   * integral (the heap's id slot); VALUE-duplicate left rows collapse
-   * like [[nearestJoin]]'s unless `lIdCol` names a unique left id
-   * (slim loop key + one payload join-back).
+   * integral (the heap's id slot). VALUE-duplicate left rows collapse
+   * like [[nearestJoin]]'s — up front, by one `distinct()` — unless
+   * `lIdCol` names a unique left id (slim loop key + one payload
+   * join-back).
    *
    * Returns `left.* ++ (rIdCol, dist2, dist, rank)`.
    */
@@ -147,29 +123,26 @@ object DistanceJoin {
       s"need 0 < startRadius ($startRadius) <= maxRadius ($maxRadius)")
     require(right.columns.contains(rIdCol),
       s"knnJoin: id column '$rIdCol' missing from right side")
-    if (lIdCol.isDefined) {
-      // slim-key path: loop on (id, x, y), payload back in one join —
-      // see [[slimLeft]] for the contract (unique non-NULL ids)
-      val id = lIdCol.get
-      requireDisjointForJoinBack(left, id, right,
-        Seq("dist2", "dist", "rank"), "knnJoin")
-      val slim = slimLeft(left, id, lx, ly, "knnJoin")
-      // direct knnLoop call so the loop knows the slimLeft uniqueness
-      // contract and takes the fused one-job-per-round shape (r16)
-      val res = knnLoop(slim, rIdCol, k, startRadius, maxRadius,
-          (u, r) => radiusJoin(u, right, lx, ly, rx, ry, r), "dist2",
-          uniqueLeft = true)
-        .withColumn("dist", sqrt(col("dist2")))
-        .select(slim.columns.map(col) ++
-          Seq(col(rIdCol), col("dist2"), col("dist"), col("rank")): _*)
-        .drop(lx, ly)
-      return left.join(res, Seq(id))
-    }
-    knnLoop(left, rIdCol, k, startRadius, maxRadius,
-        (u, r) => radiusJoin(u, right, lx, ly, rx, ry, r), "dist2")
+    def probe(u: DataFrame, r: Double): DataFrame =
+      radiusJoin(u, right, lx, ly, rx, ry, r)
+    def withDist(res: DataFrame, cols: Array[String]): DataFrame = res
       .withColumn("dist", sqrt(col("dist2")))
-      .select(left.columns.map(col) ++
+      .select(cols.map(col) ++
         Seq(col(rIdCol), col("dist2"), col("dist"), col("rank")): _*)
+    lIdCol match {
+      case Some(id) =>
+        // slim-key path: loop on (id, x, y), payload back in one join —
+        // see [[slimLeft]] for the contract (unique non-NULL ids)
+        requireDisjointForJoinBack(left, id, right,
+          Seq("dist2", "dist", "rank"), "knnJoin")
+        val slim = slimLeft(left, id, lx, ly, "knnJoin")
+        val res = withDist(knnLoop(slim, rIdCol, k, startRadius, maxRadius,
+          probe, "dist2"), slim.columns).drop(lx, ly)
+        left.join(res, Seq(id))
+      case None =>
+        withDist(knnLoop(left.distinct(), rIdCol, k, startRadius,
+          maxRadius, probe, "dist2"), left.columns)
+    }
   }
 
   /** The shared >= k-candidates doubling loop behind [[knnJoin]] and
@@ -177,105 +150,35 @@ object DistanceJoin {
     * left resolves at the first radius with >= k candidates (the probe
     * is exact within r, so its k nearest are among them); per-left
     * top-k rides the bounded heap on score `-tieDist` with ties to the
-    * smaller right id. */
+    * smaller right id — the TopKAggregate convention. `left` rows must
+    * be unique (see [[doublingLoop]]). */
   private def knnLoop(left: DataFrame, rIdCol: String, k: Int,
                       startRadius: Double, maxRadius: Double,
                       probe: (DataFrame, Double) => DataFrame,
-                      tieDist: String,
-                      uniqueLeft: Boolean = false): DataFrame = {
+                      tieDist: String): DataFrame = {
     val leftCols = left.columns.map(col)
-    var unmatched = left
-    var out: Option[DataFrame] = None
-    var r = startRadius
-    var done = false
-    var round = 0
-    // explode the round's heap into (rIdCol, tieDist, rank) rows
-    def explodeTop(df: DataFrame): DataFrame = df
-      .select(leftCols :+ posexplode(col("_top")): _*)
-      .select(leftCols ++ Seq(col("col.id").as(rIdCol),
-        (-col("col.score")).as(tieDist),
-        (col("pos") + 1).cast("int").as("rank")): _*)
-    while (!done) {
-      val atMax = r >= maxRadius
-      val cand = probe(unmatched, r)
-      // bounded heap per left: score = -dist (largest = closest),
-      // ties to the smaller right id — the TopKAggregate convention
-      val grouped = cand.groupBy(leftCols: _*)
-        .agg(count(lit(1)).as("_ncand"),
-          graft.ext.TopKAggregate.topk_by_score(
-            col(rIdCol), -col(tieDist), k).as("_top"))
-      if (uniqueLeft && atMax) {
-        // FINAL round: one consumer (the union), no unmatched set
-        // needed — no join-back, no cut (see nearestLoop)
-        val resolved = explodeTop(grouped)
-        out = Some(out.map(_.unionByName(resolved)).getOrElse(resolved))
-        done = true
-      } else if (uniqueLeft) {
-        // fused round (optimization r16, same argument as
-        // [[nearestLoop]]): ONE materialization carries the resolved
-        // heaps, the next round's unmatched set, and the miss metric;
-        // grouping columns aliased to fresh names (self-join ambiguity)
-        val keyed = grouped.select(
-          unmatched.columns.map(c => col(c).as("_k_" + c))
-            ++ Seq(col("_ncand"), col("_top")): _*)
-        val merged = unmatched.join(keyed,
-            unmatched.columns.map(c => unmatched(c) <=> keyed("_k_" + c))
-              .reduce(_ && _), "left")
-          .select(unmatched.columns.map(unmatched(_))
-            ++ Seq(col("_ncand"), col("_top")): _*)
-          .observe(s"knn_round_$round",
-            count(when(coalesce(col("_ncand"), lit(0L)) < k, 1)).as("miss"),
-            count(lit(1)).as("total"))
-        val cut = merged.lineageCut()
-        val m = merged.queryExecution.observedMetrics(s"knn_round_$round")
-        val (miss, total) = (m.getLong(0), m.getLong(1))
-        loopDebug(f"GRAFT_LOOP knn round $round r=$r%.1f " +
-          s"total=$total miss=$miss")
-        val resolved = explodeTop(
-          if (atMax) cut.filter(col("_ncand").isNotNull)
-          else cut.filter(col("_ncand") >= k))
-        out = Some(out.map(_.unionByName(resolved)).getOrElse(resolved))
-        if (atMax || miss == 0L) done = true
-        else {
-          unmatched = cut.filter(coalesce(col("_ncand"), lit(0L)) < k)
-            .select(leftCols: _*)
-          r = nextRadius(r, maxRadius, miss, total)
-        }
-      } else {
-        // the round's heap frame feeds BOTH the returned union and the
-        // anti-join below — cut it once (r16; this loop missed the r15
-        // nearestLoop argmin cut, so every consumer re-executed the
-        // probe join)
-        val resolved = explodeTop(
-          if (atMax) grouped else grouped.filter(col("_ncand") >= k))
-          .lineageCut()
-        out = Some(out.map(_.unionByName(resolved)).getOrElse(resolved))
-        if (atMax) done = true
-        else {
-          val resolvedKeys = resolved.filter(col("rank") === 1)
-            .select(leftCols: _*)
-          val next = unmatched.join(resolvedKeys,
-            unmatched.columns.map(c => unmatched(c) <=> resolvedKeys(c))
-              .reduce(_ && _), "left_anti").lineageCut()
-          if (next.isEmpty) done = true
-          else { unmatched = next; r = math.min(r * 2, maxRadius) }
-        }
-      }
-      round += 1
-    }
-    out.get
+    doublingLoop(left, startRadius, maxRadius, probe, "knn",
+      _.agg(count(lit(1)).as("_ncand"),
+        graft.ext.TopKAggregate.topk_by_score(
+          col(rIdCol), -col(tieDist), k).as("_top")),
+      coalesce(col("_ncand"), lit(0L)) < k,
+      // explode the heap into (rIdCol, tieDist, rank) rows
+      _.select(leftCols :+ posexplode(col("_top")): _*)
+        .select(leftCols ++ Seq(col("col.id").as(rIdCol),
+          (-col("col.score")).as(tieDist),
+          (col("pos") + 1).cast("int").as("rank")): _*))
   }
 
   /**
    * `lIdCol` variants of [[nearestJoin]]/[[knnJoin]]: when the caller
    * names a UNIQUE left id column, the doubling loop runs on a slim
-   * `(id, x, y)` projection — the per-round shuffles, anti-joins and
-   * per-round lineage cuts carry three columns instead of the whole left
-   * payload (which at 100 TB rides EVERY round otherwise), and the
-   * payload joins back ONCE at the end by id. Duplicate or NULL ids
-   * are REFUSED loudly (a duplicate id would multiply output rows in
-   * the payload join — a wrong answer; the whole-row variants instead
-   * collapse VALUE-duplicate lefts, their documented semantic).
+   * `(id, x, y)` projection — the per-round shuffles and lineage cuts
+   * carry three columns instead of the whole left payload (which at
+   * 100 TB rides EVERY round otherwise), and the payload joins back
+   * ONCE at the end by id. Duplicate or NULL ids are REFUSED loudly (a
+   * duplicate id would multiply output rows in the payload join — a
+   * wrong answer; the whole-row variants instead collapse
+   * VALUE-duplicate lefts, their documented semantic).
    */
   private def slimLeft(left: DataFrame, lIdCol: String, lx: String,
                        ly: String, op: String): DataFrame = {
@@ -314,14 +217,8 @@ object DistanceJoin {
       "emit ambiguous duplicates; rename them")
   }
 
-  /** Env-gated per-round logging for the doubling loops (measurement,
-    * VERDICT r15 #4/#6 "log the rounds"): GRAFT_LOOP_DEBUG=1. */
-  private def loopDebug(msg: => String): Unit =
-    if (sys.env.get("GRAFT_LOOP_DEBUG").exists(_.nonEmpty))
-      System.err.println(msg)
-
-  /** The radius schedule shared by [[nearestLoop]] and [[knnLoop]]
-    * (optimization r16). Any schedule returns IDENTICAL rows — a left
+  /** The radius schedule of [[doublingLoop]] (optimization r16). Any
+    * schedule returns IDENTICAL rows — a left
     * resolved at radius r has its true nearest (top-k) within r, so the
     * argmin/heap is the same at any larger radius; only the final
     * radius must be exactly maxRadius (the boundary-inclusion rule).
@@ -339,108 +236,119 @@ object DistanceJoin {
     else math.min(r * 2, maxRadius)
   }
 
-  /** The shared radius-doubling argmin loop: `probe(unmatched, r)` must
-    * return all (left, right) candidate pairs within `r` carrying
-    * `right.*` plus the distance columns; `tieDist` orders the per-left
-    * argmin (ties to the smaller `rIdCol`).
+  /** The one round shape of the radius-doubling loops ([[knnLoop]],
+    * [[nearestLoop]]). `probe(unmatched, r)` must return every (left,
+    * right) candidate pair within `r`; `perLeft` aggregates a round's
+    * candidates grouped by the left columns; `miss` is true on a left
+    * the round did not resolve (NULL aggregates: no candidate at all);
+    * `emit` turns resolved `left.* ++ aggregates` rows into output rows.
     *
-    * `uniqueLeft` (the slimLeft contract: unique non-NULL left keys —
-    * every lIdCol caller) takes the FUSED round shape (optimization
-    * r16, guide §1.2/§8): ONE job per round materializes unmatched
-    * LEFT-JOIN argmin, so the SAME action yields the round's matches,
-    * the next round's unmatched set, and (via an observe() metric) the
-    * miss count that both terminates the loop and adapts the radius
-    * schedule — the r15 shape paid a second anti-join job + isEmpty
-    * action per round. Rows returned are identical: with unique left
-    * keys the left join emits exactly one row per unmatched left, and
-    * filter(_best nullness) splits it into the r15 shape's `best` and
-    * anti-join results. The whole-row path (duplicate lefts collapse —
-    * a left join would instead duplicate matches) keeps the r15 shape.
-    */
-  private def nearestLoop(left: DataFrame, right: DataFrame,
-                          rIdCol: String,
-                          startRadius: Double, maxRadius: Double,
-                          probe: (DataFrame, Double) => DataFrame,
-                          distCols: Seq[String],
-                          uniqueLeft: Boolean = false): DataFrame = {
-    val tieDist = distCols.head
+    * `left` rows must be UNIQUE (every caller passes `distinct()` or the
+    * [[slimLeft]] id projection): a round LEFT-JOINs the unmatched set
+    * to its own per-left aggregate, so ONE job per round (the lineage
+    * cut, optimization r16, guide §1.2/§8) yields the round's matches,
+    * the next round's unmatched set, and — via an observe() metric read
+    * through [[Checkpoints.cutObserved]] — the miss count that both
+    * terminates the loop and adapts the radius schedule. The FINAL
+    * round (r = maxRadius) needs neither the unmatched set nor the
+    * count, and its aggregate has one consumer (the returned union), so
+    * it runs no join-back, no cut and no job inside the loop; lefts it
+    * leaves unresolved are omitted. Each round's lineage cut stops plan
+    * growth over the shrinking unmatched set. */
+  private def doublingLoop(left: DataFrame, startRadius: Double,
+                           maxRadius: Double,
+                           probe: (DataFrame, Double) => DataFrame,
+                           name: String,
+                           perLeft: RelationalGroupedDataset => DataFrame,
+                           miss: Column,
+                           emit: DataFrame => DataFrame): DataFrame = {
+    val leftNames = left.columns
     var unmatched = left
     var out: Option[DataFrame] = None
     var r = startRadius
     var done = false
     var round = 0
     while (!done) {
-      val cand = probe(unmatched, r)
-      // per-left argmin: (dist asc, right id asc) through the bounded
-      // min_by struct — no window, no sort
-      val leftCols = unmatched.columns.map(col)
-      val bestAgg = cand.groupBy(leftCols: _*)
-        .agg(min_by(
-          struct(right.columns.map(col) ++ distCols.map(col): _*),
-          struct(col(tieDist), col(rIdCol))).as("_best"))
-      if (uniqueLeft && r >= maxRadius) {
-        // FINAL round: nothing downstream needs the unmatched set or
-        // the miss count, and the argmin has exactly one consumer (the
-        // returned union) — no join-back, no cut, no extra job at all.
-        // Single-round gates (startRadius >= maxRadius) hit only this.
-        val best = bestAgg.select(leftCols :+ col("_best.*"): _*)
-        out = Some(out.map(_.unionByName(best)).getOrElse(best))
+      val agg = perLeft(probe(unmatched, r).groupBy(leftNames.map(col): _*))
+      val resolved = if (r >= maxRadius) {
         done = true
-      } else if (uniqueLeft) {
-        // fused round: one materialization carries matches AND misses.
-        // The argmin's grouping columns keep their input attribute ids,
-        // so alias them to fresh names before joining back onto the
-        // SAME unmatched frame they derive from (self-join ambiguity)
-        val keyed = bestAgg.select(
-          unmatched.columns.map(c => col(c).as("_k_" + c)) :+ col("_best"): _*)
-        val merged = unmatched.join(keyed,
-            unmatched.columns.map(c => unmatched(c) <=> keyed("_k_" + c))
-              .reduce(_ && _), "left")
-          .select(unmatched.columns.map(unmatched(_)) :+ col("_best"): _*)
-          .observe(s"nl_round_$round",
-            count(when(col("_best").isNull, 1)).as("miss"),
-            count(lit(1)).as("total"))
-        val cut = merged.lineageCut()
-        val m = merged.queryExecution.observedMetrics(s"nl_round_$round")
-        val (miss, total) = (m.getLong(0), m.getLong(1))
-        loopDebug(f"GRAFT_LOOP nearest round $round r=$r%.1f " +
-          s"total=$total miss=$miss")
-        val best = cut.filter(col("_best").isNotNull)
-          .select(leftCols :+ col("_best.*"): _*)
-        out = Some(out.map(_.unionByName(best)).getOrElse(best))
-        if (miss == 0L) done = true
-        else {
-          unmatched = cut.filter(col("_best").isNull).drop("_best")
-          r = nextRadius(r, maxRadius, miss, total)
-        }
+        emit(agg)
       } else {
-        // the round's argmin frame is consumed TWICE — the anti-join
-        // deriving the next round's unmatched set, and the returned
-        // union — and each un-cut consumption re-executes the whole
-        // probe join; cut once, both consumers read the slim rows
-        val best = bestAgg
-          .select(leftCols :+ col("_best.*"): _*)
-          .lineageCut()
-        out = Some(out.map(_.unionByName(best)).getOrElse(best))
-        // null-SAFE anti join: a left row with a NULL payload column
-        // must still recognize itself as matched (EqualTo would
-        // re-probe and re-emit it every round)
-        val bestKeys = best.select(leftCols: _*)
-        val next = unmatched.join(bestKeys,
-          unmatched.columns.map(c => unmatched(c) <=> bestKeys(c))
-            .reduce(_ && _), "left_anti")
-        if (r >= maxRadius) done = true
+        // the aggregate's grouping columns keep their input attribute
+        // ids, so alias them to fresh names before joining back onto
+        // the SAME unmatched frame they derive from (self-join
+        // ambiguity); null-safe, so a NULL payload matches itself
+        val aggNames = agg.columns.filterNot(leftNames.contains)
+        val keyed = agg.select(leftNames.map(c => col(c).as("_k_" + c))
+          ++ aggNames.map(col): _*)
+        val merged = unmatched.join(keyed,
+            leftNames.map(c => unmatched(c) <=> keyed("_k_" + c))
+              .reduce(_ && _), "left")
+          .select(leftNames.map(unmatched(_)) ++ aggNames.map(col): _*)
+          .observe(s"${name}_round_$round",
+            count(when(miss, 1)).as("miss"), count(lit(1)).as("total"))
+        val (cut, Seq(m)) = Checkpoints.cutObserved(merged,
+          s"$name doubling loop", s"${name}_round_$round")
+        val (nMiss, total) = (m.getLong(0), m.getLong(1))
+        if (nMiss == 0L) done = true
         else {
-          val remaining = next.lineageCut()
-          if (remaining.isEmpty) done = true
-          else { unmatched = remaining; r = math.min(r * 2, maxRadius) }
+          unmatched = cut.filter(miss).select(leftNames.map(col): _*)
+          r = nextRadius(r, maxRadius, nMiss, total)
         }
+        emit(cut.filter(!miss))
       }
+      out = Some(out.map(_.unionByName(resolved)).getOrElse(resolved))
       round += 1
     }
     out.get
   }
 
+  /** The shared radius-doubling argmin loop behind the nearest-neighbor
+    * joins: returns `left.* ++ right.* ++ distCols` for every left with
+    * a candidate within `maxRadius`. `probe` rows carry `right.*` plus
+    * the distance columns; `distCols.head` orders the per-left argmin
+    * (ties to the smaller `rIdCol`). `left` rows must be unique (see
+    * [[doublingLoop]]). */
+  private def nearestLoop(left: DataFrame, right: DataFrame,
+                          rIdCol: String,
+                          startRadius: Double, maxRadius: Double,
+                          probe: (DataFrame, Double) => DataFrame,
+                          distCols: Seq[String]): DataFrame = {
+    val leftCols = left.columns.map(col)
+    doublingLoop(left, startRadius, maxRadius, probe, "nearest",
+      // per-left argmin: (dist asc, right id asc) through the bounded
+      // min_by struct — no window, no sort
+      _.agg(min_by(
+        struct(right.columns.map(col) ++ distCols.map(col): _*),
+        struct(col(distCols.head), col(rIdCol))).as("_best")),
+      col("_best").isNull,
+      _.select(leftCols :+ col("_best.*"): _*))
+  }
+
+  /**
+   * NEAREST-neighbor join: for every left point, its single closest
+   * right point (ties to the smallest `rIdCol`). Exact, via ITERATIVE
+   * RADIUS DOUBLING over [[radiusJoin]]: probe at `startRadius`,
+   * resolve the lefts that found any candidate (all pairs within r are
+   * present, so the per-left minimum at radius r IS the true nearest),
+   * re-probe only the unresolved lefts at a larger radius, up to
+   * `maxRadius` — at most log2(maxRadius/startRadius) + 1 rounds, each a
+   * hash join that carries only the still-unmatched lefts. Lefts with
+   * no right point within `maxRadius` are OMITTED (the bound is the
+   * caller's contract; an unbounded search against an empty right side
+   * would never terminate). VALUE-duplicate left rows collapse to one
+   * output row — up front, by one `distinct()` over the left, so the
+   * loop always runs on unique rows; pass `lIdCol` (a unique id) to
+   * group on a slim key instead, which both preserves duplicates-
+   * by-payload and keeps wide left payloads out of the per-round
+   * shuffles (the payload joins back once at the end).
+   *
+   * Scale: round i costs |unmatched_i| × (right density within 3×3
+   * cells at radius r_i) — geometrically fewer lefts against
+   * geometrically larger cells; for realistic densities almost
+   * everything resolves in round 1 and the tail pays the doubling.
+   * Each round costs one job ([[doublingLoop]]).
+   */
   def nearestJoin(left: DataFrame, right: DataFrame,
                   lx: String, ly: String, rx: String, ry: String,
                   rIdCol: String,
@@ -450,19 +358,19 @@ object DistanceJoin {
       s"need 0 < startRadius ($startRadius) <= maxRadius ($maxRadius)")
     require(right.columns.contains(rIdCol),
       s"nearestJoin: id column '$rIdCol' missing from right side")
+    def probe(u: DataFrame, r: Double): DataFrame =
+      radiusJoin(u, right, lx, ly, rx, ry, r)
     lIdCol match {
       case Some(id) =>
         requireDisjointForJoinBack(left, id, right,
           Seq("dist2", "dist"), "nearestJoin")
         val slim = slimLeft(left, id, lx, ly, "nearestJoin")
         val res = nearestLoop(slim, right, rIdCol, startRadius, maxRadius,
-          (u, r) => radiusJoin(u, right, lx, ly, rx, ry, r),
-          Seq("dist2", "dist"), uniqueLeft = true).drop(lx, ly)
+          probe, Seq("dist2", "dist")).drop(lx, ly)
         left.join(res, Seq(id)) // payload back in ONE hash join
       case None =>
-        nearestLoop(left, right, rIdCol, startRadius, maxRadius,
-          (u, r) => radiusJoin(u, right, lx, ly, rx, ry, r),
-          Seq("dist2", "dist"))
+        nearestLoop(left.distinct(), right, rIdCol, startRadius, maxRadius,
+          probe, Seq("dist2", "dist"))
     }
   }
 
@@ -971,12 +879,11 @@ object DistanceJoin {
           Seq("dist_m"), "geoNearestJoin")
         val slim = slimLeft(left, id, lLat, lLon, "geoNearestJoin")
         val res = nearestLoop(slim, right, rIdCol, startRadiusMeters,
-          maxRadiusMeters, probe, Seq("dist_m"), uniqueLeft = true)
-          .drop(lLat, lLon)
+          maxRadiusMeters, probe, Seq("dist_m")).drop(lLat, lLon)
         left.join(res, Seq(id))
       case None =>
-        nearestLoop(left, right, rIdCol, startRadiusMeters, maxRadiusMeters,
-          probe, Seq("dist_m"))
+        nearestLoop(left.distinct(), right, rIdCol, startRadiusMeters,
+          maxRadiusMeters, probe, Seq("dist_m"))
     }
   }
 
@@ -1001,23 +908,19 @@ object DistanceJoin {
       s"geoKnnJoin: maxRadius must stay under pi*R metres")
     require(right.columns.contains(rIdCol),
       s"geoKnnJoin: id column '$rIdCol' missing from right side")
-    if (lIdCol.isDefined) {
-      val id = lIdCol.get
-      requireDisjointForJoinBack(left, id, right,
-        Seq("dist_m", "rank"), "geoKnnJoin")
-      val slim = slimLeft(left, id, lLat, lLon, "geoKnnJoin")
-      // direct knnLoop call so the loop knows the slimLeft uniqueness
-      // contract and takes the fused one-job-per-round shape (r16)
-      return left.join(
-        knnLoop(slim, rIdCol, k, startRadiusMeters, maxRadiusMeters,
-          (u, r) => geoRadiusJoin(u, right, lLat, lLon, rLat, rLon, r,
-            earthRadiusMeters), "dist_m", uniqueLeft = true)
-          .drop(lLat, lLon),
-        Seq(id))
+    def probe(u: DataFrame, r: Double): DataFrame =
+      geoRadiusJoin(u, right, lLat, lLon, rLat, rLon, r, earthRadiusMeters)
+    lIdCol match {
+      case Some(id) =>
+        requireDisjointForJoinBack(left, id, right,
+          Seq("dist_m", "rank"), "geoKnnJoin")
+        val slim = slimLeft(left, id, lLat, lLon, "geoKnnJoin")
+        left.join(knnLoop(slim, rIdCol, k, startRadiusMeters,
+          maxRadiusMeters, probe, "dist_m").drop(lLat, lLon), Seq(id))
+      case None =>
+        knnLoop(left.distinct(), rIdCol, k, startRadiusMeters,
+          maxRadiusMeters, probe, "dist_m")
     }
-    knnLoop(left, rIdCol, k, startRadiusMeters, maxRadiusMeters,
-      (u, r) => geoRadiusJoin(u, right, lLat, lLon, rLat, rLon, r,
-        earthRadiusMeters), "dist_m")
   }
 
   /**
@@ -1145,11 +1048,10 @@ object DistanceJoin {
           Seq("dist_m"), "geoSnapToSegments")
         val slim = slimLeft(points, id, pLat, pLon, "geoSnapToSegments")
         val res = nearestLoop(slim, segs, sIdCol, startRadiusMeters,
-          maxRadiusMeters, probe, Seq("dist_m"), uniqueLeft = true)
-          .drop(pLat, pLon)
+          maxRadiusMeters, probe, Seq("dist_m")).drop(pLat, pLon)
         points.join(res, Seq(id))
       case None =>
-        nearestLoop(points, segs, sIdCol, startRadiusMeters,
+        nearestLoop(points.distinct(), segs, sIdCol, startRadiusMeters,
           maxRadiusMeters, probe, Seq("dist_m"))
     }
   }
@@ -1306,11 +1208,11 @@ object DistanceJoin {
         requireDisjointForJoinBack(points, id, segs, distCols, "snapToSegments")
         val slim = slimLeft(points, id, px, py, "snapToSegments")
         val res = nearestLoop(slim, segs, sIdCol, startRadius, maxRadius,
-          probe, distCols, uniqueLeft = true).drop(px, py)
+          probe, distCols).drop(px, py)
         points.join(res, Seq(id))
       case None =>
-        nearestLoop(points, segs, sIdCol, startRadius, maxRadius,
-          probe, distCols)
+        nearestLoop(points.distinct(), segs, sIdCol, startRadius,
+          maxRadius, probe, distCols)
     }
   }
 

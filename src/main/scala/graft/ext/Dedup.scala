@@ -3,6 +3,7 @@ package graft.ext
 import graft.core.Checkpoints.CutOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import org.apache.spark.sql.expressions.Window
 
 import TextFunctions._
@@ -331,22 +332,16 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val labels0 = edges.groupBy(col("a").as("node"))
       .agg(least(min("b"), col("a")).as("rep"))
-      .observe("cc_nodes", count(lit(1)).as("n"))
-    var labels = labels0.lineageCut()
-    // node count off the init materialization's own observe metric (no
-    // extra job): it decides — §8 "decide with small rows" — whether
-    // the per-round label frame rides a BROADCAST join (no shuffle of
-    // the much larger edge set per round; the usual case for near-dup
-    // cluster graphs, whose label frame is tiny next to the edges) or
-    // the shuffle join that arbitrary-scale graphs need. Threshold via
-    // spark.graft.cc.broadcastNodes (rows; ~16 B/row — the default 2M
-    // is a ~32 MB broadcast, well under the driver/executor caps).
-    val nodeCount = labels0.queryExecution.observedMetrics("cc_nodes")
-      .getLong(0)
-    val bcastLimit = pairs.sparkSession.conf
-      .getOption("spark.graft.cc.broadcastNodes").map(_.toLong)
-      .getOrElse(2000000L)
-    val bcast = nodeCount <= bcastLimit
+    // node count and label bytes off the init materialization's own
+    // observe metric (no extra job): they decide — §8 "decide with small
+    // rows" — whether the per-round label frame rides a BROADCAST join
+    // (no shuffle of the much larger edge set per round; the usual case
+    // for near-dup cluster graphs, whose label frame is tiny next to the
+    // edges) or the shuffle join that arbitrary-scale graphs need
+    val (cut0, Seq(sized)) = graft.core.Checkpoints.cutObserved(
+      observeLabelBytes(labels0), "components", "cc_nodes")
+    var labels = cut0
+    val bcast = ccBroadcast(sized.getLong(0), sized.getLong(1))
     def side(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
     // self-loops (marked `_own` = true) ride the per-round join so ONE
     // aggregate yields min(own, neighbors) AND carries the node's
@@ -380,15 +375,9 @@ object Dedup {
       // ONE job: the lineage cut materializes the round AND the
       // CollectMetrics node inside it answers "did any label change?" —
       // the r15 shape paid a second join+isEmpty job per round for that
-      val t0 = System.nanoTime()
-      val next = nextAll.lineageCut()
-      val changed = nextAll.queryExecution.observedMetrics.get(s"cc_round_$i")
-        .map(_.getLong(0)).getOrElse(throw new IllegalStateException(
-          "components(): convergence metric missing after materialization"))
-      converged = changed == 0L
-      if (sys.env.get("GRAFT_LOOP_DEBUG").exists(_.nonEmpty))
-        System.err.println(f"GRAFT_LOOP components round $i: " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s, changed=$changed")
+      val (next, Seq(changed)) = graft.core.Checkpoints.cutObserved(
+        nextAll, "components", s"cc_round_$i")
+      converged = changed.getLong(0) == 0L
       labels = next.select(col("node"), col("rep"))
       i += 1
     }
@@ -397,6 +386,29 @@ object Dedup {
       s"components() did not converge in $maxIter iterations — raise maxIter")
     labels
   }
+
+  /** The largest (node, rep) label frame [[components]] broadcasts per
+    * round: 2M rows of two BIGINTs at 16 B each, a broadcast well under
+    * the driver/executor caps. */
+  private[graft] val CcBroadcastBytes = 32000000L
+
+  /** Attach the `cc_nodes` metric to a (node, rep) label frame: row
+    * count plus the variable-length bytes of both columns (0 for
+    * integral ids; UTF-8 bytes of the string form otherwise). */
+  private[graft] def observeLabelBytes(labels: DataFrame): DataFrame = {
+    val varBytes = labels.schema("node").dataType match {
+      case ByteType | ShortType | IntegerType | LongType => lit(0L)
+      case _ => coalesce(sum(octet_length(col("node").cast("string")) +
+        octet_length(col("rep").cast("string"))), lit(0L))
+    }
+    labels.observe("cc_nodes", count(lit(1)).as("n"), varBytes.as("var_bytes"))
+  }
+
+  /** Broadcast the label frame when its UnsafeRow size fits
+    * [[CcBroadcastBytes]]: each row holds two 8-byte slots plus the
+    * variable-length bytes measured by [[observeLabelBytes]]. */
+  private[graft] def ccBroadcast(nodes: Long, varBytes: Long): Boolean =
+    nodes * 16L + varBytes <= CcBroadcastBytes
 
   /** (id, sh) char-k-shingle sets — THE frame to compute once and reuse. */
   def charShingleSets(df: DataFrame, textCol: String, idCol: String,

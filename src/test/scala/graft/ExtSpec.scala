@@ -4547,6 +4547,56 @@ class ExtSpec extends SparkSpec {
     }
   }
 
+  /** Adversarial inputs for the whole-row nearest/kNN paths, which
+    * collapse VALUE-duplicate lefts up front: 40 clustered lefts plus
+    * 2100 far ones (more unresolved lefts than the doubling loop's
+    * straight-to-maxRadius tail of 2000, so the far block pays several
+    * doubling rounds), every third row duplicated by value, a NULL
+    * `tag`, NaN and -0.0 `w` payloads, and integer-grid coordinates
+    * (rights 0/21/42 share a point) so distance ties are everywhere.
+    * `lid` is unique per distinct left row. */
+  private def loopTwinInputs() = {
+    val rows = (0 until 2140).map { i =>
+      val (x, y) =
+        if (i < 40) ((i * 7 % 20).toDouble, (i * 11 % 20).toDouble)
+        else (300.0 + (i - 40) % 50, 300.0 + (i - 40) / 50)
+      (i.toLong, x, y, if (i % 5 == 0) None else Some(s"t$i"),
+        if (i % 7 == 0) Double.NaN else if (i % 7 == 1) -0.0 else i.toDouble)
+    }
+    val rRows = (0L until 45L).map(i =>
+      (i, (i * 13 % 21).toDouble, (i * 17 % 21).toDouble))
+    (rows, (rows ++ rows.filter(_._1 % 3 == 0)).toDF("lid", "lx", "ly", "tag", "w"),
+      rRows)
+  }
+
+  /** Brute planar top-k per distinct left, ties (dist2, rid). */
+  private def bruteTopK(rows: Seq[(Long, Double, Double, Option[String], Double)],
+                        rRows: Seq[(Long, Double, Double)],
+                        k: Int): Set[(Long, Long, Int)] =
+    rows.flatMap { case (li, x, y, _, _) =>
+      rRows.sortBy { case (ri, rx, ry) =>
+          ((x - rx) * (x - rx) + (y - ry) * (y - ry), ri) }
+        .take(k).zipWithIndex.map { case ((ri, _, _), j) => (li, ri, j + 1) }
+    }.toSet
+
+  /** Every output row carries its left's payload: NULL stays NULL, NaN
+    * stays NaN, -0.0 compares equal to its (grouping-normalized) value. */
+  private def assertPayloads(out: Array[org.apache.spark.sql.Row],
+                             rows: Seq[(Long, Double, Double, Option[String], Double)]): Unit = {
+    val byId = rows.map(r => r._1 -> (r._4, r._5)).toMap
+    out.foreach { o =>
+      val (tag, w) = byId(o.getAs[Long]("lid"))
+      assert(Option(o.getAs[String]("tag")) == tag, o)
+      val got = o.getAs[Double]("w")
+      assert(if (w.isNaN) got.isNaN else got == w, o)
+    }
+  }
+
+  /** (lid, rid, rank) triples of a kNN result. */
+  private def lrk(df: org.apache.spark.sql.DataFrame): Array[(Long, Long, Int)] =
+    df.select("lid", "rid", "rank").collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getInt(2)))
+
   test("knn join: brute twin, short groups at maxRadius, premature-resolution guard") {
     import graft.core.DistanceJoin
     val rnd = new scala.util.Random(29)
@@ -4587,6 +4637,34 @@ class ExtSpec extends SparkSpec {
       .select("lid", "rid").collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(k1 == n1)
+    // adversarial whole-row inputs: value-duplicate lefts collapse to
+    // exactly one ranked k-list each, payloads survive, ties and the
+    // multi-round far block match the brute twin, empty left is empty
+    val (rows, la, rRows) = loopTwinInputs()
+    val ra = rRows.toDF("rid", "rx", "ry")
+    val adv = DistanceJoin.knnJoin(la, ra, "lx", "ly", "rx", "ry", "rid",
+      k = 3, startRadius = 1.0, maxRadius = 4096.0).collect()
+    val advSet = adv.map(x =>
+      (x.getAs[Long]("lid"), x.getAs[Long]("rid"), x.getAs[Int]("rank"))).toSet
+    assert(adv.length == rows.size * 3 && advSet.size == adv.length)
+    assert(advSet == bruteTopK(rows, rRows, 3))
+    assertPayloads(adv, rows)
+    assert(DistanceJoin.knnJoin(la.limit(0), ra, "lx", "ly", "rx", "ry",
+      "rid", k = 3, 1.0, 4096.0).count() == 0L)
+    // geo: the same inputs as degrees, whole-row against the lIdCol twin
+    // on the deduplicated lefts (the twin refuses duplicate ids)
+    val gl = la.select($"lid", ($"lx" / 10).as("llat"), ($"ly" / 10).as("llon"),
+      $"tag", $"w")
+    val gr = ra.select($"rid", ($"rx" / 10).as("rlat"), ($"ry" / 10).as("rlon"))
+    val gWhole = lrk(DistanceJoin.geoKnnJoin(gl, gr, "llat", "llon",
+      "rlat", "rlon", "rid", k = 3, 1000.0, 1.0e7))
+    val gTwin = lrk(DistanceJoin.geoKnnJoin(gl.dropDuplicates("lid"), gr,
+      "llat", "llon", "rlat", "rlon", "rid", k = 3, 1000.0, 1.0e7,
+      lIdCol = Some("lid")))
+    assert(gWhole.length == rows.size * 3 && gWhole.toSet.size == gWhole.length)
+    assert(gWhole.toSet == gTwin.toSet && gTwin.length == gWhole.length)
+    assert(DistanceJoin.geoKnnJoin(gl.limit(0), gr, "llat", "llon",
+      "rlat", "rlon", "rid", k = 3, 1000.0, 1.0e7).count() == 0L)
   }
 
   test("idwInterpolate: brute twin, exact-hit branch, no-neighbor NULL, geo variant, refusals") {
@@ -4887,6 +4965,36 @@ class ExtSpec extends SparkSpec {
         5.0, 20.0)
       .select("lid").collect().map(_.getLong(0)).toSet
     assert(!far.contains(999L) && far.contains(0L))
+    // adversarial whole-row inputs (see loopTwinInputs): one row per
+    // distinct left, payloads intact, brute argmin with (dist2, rid)
+    // ties across the multi-round far block; empty left is empty
+    val (rows, la, rRows) = loopTwinInputs()
+    val ra = rRows.toDF("rid", "rx", "ry")
+    val adv = DistanceJoin.nearestJoin(la, ra, "lx", "ly", "rx", "ry", "rid",
+      startRadius = 1.0, maxRadius = 4096.0).collect()
+    val advPairs = adv.map(x => (x.getAs[Long]("lid"), x.getAs[Long]("rid")))
+    assert(advPairs.length == rows.size && advPairs.map(_._1).toSet.size == rows.size)
+    assert(advPairs.toSet == bruteTopK(rows, rRows, 1).map(t => (t._1, t._2)))
+    assertPayloads(adv, rows)
+    assert(DistanceJoin.nearestJoin(la.limit(0), ra, "lx", "ly", "rx", "ry",
+      "rid", 1.0, 4096.0).count() == 0L)
+    // geo: the same inputs as degrees, whole-row against the lIdCol twin
+    val gl = la.select($"lid", ($"lx" / 10).as("llat"), ($"ly" / 10).as("llon"),
+      $"tag", $"w")
+    val gr = ra.select($"rid", ($"rx" / 10).as("rlat"), ($"ry" / 10).as("rlon"))
+    def lr(df: org.apache.spark.sql.DataFrame) =
+      df.select("lid", "rid").collect().map(x => (x.getLong(0), x.getLong(1)))
+    val gWhole = DistanceJoin.geoNearestJoin(gl, gr, "llat", "llon",
+      "rlat", "rlon", "rid", 1000.0, 1.0e7).collect()
+    val gTwin = lr(DistanceJoin.geoNearestJoin(gl.dropDuplicates("lid"), gr,
+      "llat", "llon", "rlat", "rlon", "rid", 1000.0, 1.0e7,
+      lIdCol = Some("lid")))
+    assert(gWhole.length == rows.size && gTwin.length == rows.size)
+    assert(gWhole.map(x => (x.getAs[Long]("lid"), x.getAs[Long]("rid"))).toSet ==
+      gTwin.toSet)
+    assertPayloads(gWhole, rows)
+    assert(DistanceJoin.geoNearestJoin(gl.limit(0), gr, "llat", "llon",
+      "rlat", "rlon", "rid", 1000.0, 1.0e7).count() == 0L)
   }
 
   test("context assembly: prefix-stop semantics, boundary, ties, refusals") {
@@ -5382,6 +5490,48 @@ class ExtSpec extends SparkSpec {
     assert(eEnc.getMessage.contains("ambiguous") ||
       Option(eEnc.getCause).exists(_.getMessage.contains("ambiguous")) ||
       eEnc.toString.contains("ambiguous"))
+  }
+
+  test("Checkpoints.cutObserved: the cut's rows plus named metrics; a never-observed name throws naming itself and the caller") {
+    import graft.core.Checkpoints
+    val df = spark.range(0, 100).select(($"id" % 7).as("k"), $"id")
+    val (cut, Seq(m)) = Checkpoints.cutObserved(
+      df.observe("spec_m", count(lit(1)).as("n"), sum($"k").as("s")), "spec", "spec_m")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._2).toSeq
+    assert(rows(cut) == rows(Checkpoints.cut(df)))
+    assert(m.getLong(0) == 100L && m.getLong(1) == (0 until 100).map(_ % 7).sum)
+    val e = intercept[IllegalStateException](Checkpoints.cutObserved(
+      df.observe("spec_m2", count(lit(1)).as("n")), "specCaller",
+      "spec_m2", "never_observed"))
+    assert(e.getMessage.contains("'never_observed'") &&
+      e.getMessage.contains("specCaller"), e.getMessage)
+  }
+
+  test("components broadcast decision: 32 MB of (node, rep) label bytes for long and wide string ids") {
+    import graft.core.Checkpoints
+    // long ids: two 8-byte slots a row — exactly the 2M-row cap
+    assert(Dedup.ccBroadcast(2000000L, 0L))
+    assert(!Dedup.ccBroadcast(2000001L, 0L))
+    // 150-char string ids: 16 + 2 * 150 = 316 B a row, so the cap sits
+    // at 101,265 nodes, not at 2M (a 632 MB broadcast by row count)
+    assert(Dedup.ccBroadcast(101265L, 101265L * 300))
+    assert(!Dedup.ccBroadcast(101266L, 101266L * 300))
+    // the cc_nodes observe measures those bytes: string bytes of both
+    // columns for string ids, none for integral ids
+    def measured(labels: org.apache.spark.sql.DataFrame) =
+      Checkpoints.cutObserved(Dedup.observeLabelBytes(labels), "spec",
+        "cc_nodes")._2.head
+    val s = measured(Seq(("a" * 150, "a" * 150), ("b" * 150, "a" * 150))
+      .toDF("node", "rep"))
+    assert(s.getLong(0) == 2L && s.getLong(1) == 600L)
+    val l = measured(Seq((1L, 1L), (2L, 1L)).toDF("node", "rep"))
+    assert(l.getLong(0) == 2L && l.getLong(1) == 0L)
+    // and components() still labels string-id graphs
+    val cc = Dedup.components(Seq(("x", "y"), ("y", "z"), ("p", "q"))
+        .toDF("id", "id2"))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(cc == Map("x" -> "x", "y" -> "x", "z" -> "x", "p" -> "p", "q" -> "p"))
   }
 
   test("reliable checkpoint mode (spark.graft.checkpointDir): identical results from every iterative operator") {

@@ -804,4 +804,38 @@ class StreamingSpec extends SparkSpec {
     val n = sess.count()
     assert(n > 0)
   }
+
+  test("awaitWrites: an interrupt cancels the sibling writes, restores the flag and rethrows") {
+    import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+    import java.util.concurrent.atomic.AtomicReference
+    val pool = Executors.newFixedThreadPool(2)
+    val started = new CountDownLatch(2)
+    val release = new CountDownLatch(1)
+    try {
+      val writes = (0 until 2).map(_ => pool.submit(new Callable[Unit] {
+        def call(): Unit = { started.countDown(); release.await() }
+      }))
+      assert(started.await(10, TimeUnit.SECONDS))
+      val caught = new AtomicReference[Throwable]()
+      val flag = new AtomicReference[java.lang.Boolean](false)
+      val waiter = new Thread(() =>
+        try EventStream.awaitWrites(writes)
+        catch { case t: Throwable =>
+          caught.set(t); flag.set(Thread.currentThread().isInterrupted) })
+      waiter.start()
+      // interrupt only once the waiter is blocked inside Future.get
+      val deadline = System.nanoTime() + 10e9.toLong
+      while (waiter.getState != Thread.State.WAITING &&
+          System.nanoTime() < deadline) Thread.sleep(5)
+      assert(waiter.getState == Thread.State.WAITING)
+      waiter.interrupt()
+      waiter.join(10000)
+      assert(caught.get.isInstanceOf[InterruptedException], caught.get)
+      assert(flag.get.booleanValue, "interrupt flag not restored")
+      assert(writes.forall(_.isCancelled), "sibling writes not cancelled")
+    } finally {
+      release.countDown()
+      pool.shutdownNow()
+    }
+  }
 }
